@@ -86,6 +86,47 @@ def _pool_headlines(
     return sf_entry, pooled, noisy
 
 
+def _assemble_output(
+    hist: dict,
+    code_hash: str,
+    sf: str,
+    trials: dict[str, list],
+    n_convs: int,
+    n_clusters: int,
+    quality: dict[str, float],
+) -> dict:
+    """The JSON result line (before the recorded scaling block): pools
+    this invocation's trials into ``hist`` (mutated), then reports the
+    pooled headline of each query timed in this invocation — its trials
+    are in the pool — plus the transcripts throughput and quality block."""
+    sf_entry, pooled, noisy = _pool_headlines(hist, code_hash, sf, trials)
+    timings = {name: pooled[name] for name in trials}
+    return {
+        "metric": "headline_queries_total_time",
+        "value": round(sum(timings.values()), 3),
+        "unit": "sec",
+        "queries": timings,
+        "trials": trials,
+        "noisy": noisy,
+        "sf": sf,
+        "pooled": {
+            "code_hash": code_hash,
+            "invocations": hist[code_hash]["invocations"],
+            "n_trials": {name: len(ts) for name, ts in sf_entry.items()},
+        },
+        "transcripts": {
+            "conversations": n_convs,
+            "clusters": n_clusters,
+            "conversations_per_sec": round(
+                n_convs / timings["transcripts_match"], 1
+            ),
+            "f1": round(quality["f1"], 5),
+            "precision": round(quality["precision"], 5),
+            "recall": round(quality["recall"], 5),
+        },
+    }
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -149,9 +190,7 @@ def main() -> None:
         "connected_components",
     ]
     qs = entry_mod.queries()
-    timings: dict[str, float] = {}
     trials: dict[str, list] = {}
-    noisy: list[str] = []
     # Steady-state + interference-robust protocol (round-3 verdict: the
     # old per-query best-of-2 reported phantom regressions that isolated
     # re-runs disproved — a single interference window hit both trials of
@@ -188,14 +227,6 @@ def main() -> None:
     def _has_quiet(name: str) -> bool:
         return any(sp < _QUIET_STEAL_PCT for _, sp in trials.get(name, []))
 
-    def _headline(name: str) -> float:
-        ts = trials[name]
-        quiet = [sec for sec, sp in ts if sp < _QUIET_STEAL_PCT]
-        if quiet:
-            return min(quiet)
-        noisy.append(name)
-        return min(sec for sec, _ in ts)
-
     dfs = {n: qs[n](spark, sf_dir) for n in bench_queries if n in qs}
     for rnd in range(TIMED_ROUNDS + 1 + EXTRA_ROUNDS):
         for name, df in dfs.items():
@@ -210,8 +241,6 @@ def main() -> None:
             )
         if rnd >= TIMED_ROUNDS and all(_has_quiet(n) for n in dfs):
             break
-    for name in dfs:
-        timings[name] = _headline(name)
 
     # north-star throughput: transcript ER pipeline, conversations/sec.
     # Input is generated+cached first so the timing covers the PIPELINE
@@ -245,7 +274,6 @@ def main() -> None:
         if i >= TIMED_ROUNDS and _has_quiet("transcripts_match"):
             break
         _timed_trial("transcripts_match", _run_pipeline)
-    timings["transcripts_match"] = _headline("transcripts_match")
 
     # Pairwise quality vs datagen truth (untimed, one extra pipeline run):
     # reported ALONGSIDE throughput so a config-driven cluster-count shift
@@ -271,41 +299,13 @@ def main() -> None:
     if os.path.exists(_HEADLINE_POOL):
         with open(_HEADLINE_POOL) as f:
             hist = json.load(f)
-    sf_entry, pooled, pooled_noisy = _pool_headlines(
-        hist, code_hash, sf, trials
+    out = _assemble_output(
+        hist, code_hash, sf, trials, n_convs, n_clusters, quality
     )
     os.makedirs(os.path.dirname(_HEADLINE_POOL), exist_ok=True)
     with open(_HEADLINE_POOL, "w") as f:
         json.dump(hist, f, indent=1)
 
-    # headline = pooled min (this invocation's trials are in the pool)
-    timings = {name: pooled[name] for name in timings}
-    noisy = pooled_noisy
-    convs_per_sec = round(n_convs / timings["transcripts_match"], 1)
-
-    total = round(sum(timings.values()), 3)
-    out = {
-        "metric": "headline_queries_total_time",
-        "value": total,
-        "unit": "sec",
-        "queries": timings,
-        "trials": trials,
-        "noisy": noisy,
-        "sf": sf,
-        "pooled": {
-            "code_hash": code_hash,
-            "invocations": entry["invocations"],
-            "n_trials": {name: len(ts) for name, ts in sf_entry.items()},
-        },
-        "transcripts": {
-            "conversations": n_convs,
-            "clusters": n_clusters,
-            "conversations_per_sec": convs_per_sec,
-            "f1": round(quality["f1"], 5),
-            "precision": round(quality["precision"], 5),
-            "recall": round(quality["recall"], 5),
-        },
-    }
     # Surface the recorded N->4N scaling evidence (bench/scaling.py runs,
     # protocol + analysis in BENCH.md) so this one line carries it too.
     results_path = os.path.join(

@@ -69,13 +69,6 @@ def role_seq_key(
                        max_block_size=max_block_size)
 
 
-def nturns_bucket_key(column: str = "n_turns", width: int = 4) -> BlockingKey:
-    """Length bucket (joins conversations of similar turn count)."""
-    return BlockingKey(
-        f"nturns{width}", lambda df: F.floor(F.col(column) / width).cast("string")
-    )
-
-
 def token_prefix_key(column: str, k: int = 3) -> BlockingKey:
     """Normalized-token key: first k distinct lowercase tokens in sorted
     order — robust to word order / duplication, cheap to compute."""
@@ -128,7 +121,7 @@ def minhash_band_keys(
     ~0.62 case-folded at the default 16x4 geometry (per-band collision
     probability is 1-(1-s^4)^4 and case flips crater the case-sensitive
     Jaccard s), and even with the other two families covering, the full
-    default keyset loses ~8pp of pairs (tests/test_blocking.py pins
+    default keyset loses ~8pp of pairs (tests/test_blocking_recall.py pins
     this). Applies to both paths, so keys are identical with or without
     the precomputed column.
 

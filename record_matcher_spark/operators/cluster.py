@@ -13,9 +13,9 @@ O(log^2 n) rounds on pathological graphs and 2-4 rounds on the
 near-transitive match graphs ER produces; per-iteration
 ``localCheckpoint`` truncates lineage so plans stay flat.
 
-Node ids are hashed to longs internally (min-comparison needs a total
-order that matches the oracle: we order by the ORIGINAL id string, not the
-hash, by carrying ids as (sortable) strings when requested).
+Graphs under a single-task edge gate skip the rounds: one Arrow task
+labels them over the original ids. Only the star rounds hash string ids
+to longs; labels are always the min ORIGINAL id, never the min hash.
 """
 
 from __future__ import annotations
@@ -85,51 +85,43 @@ def _cc_label_kernel(a: np.ndarray, b: np.ndarray, m: int) -> np.ndarray:
         label = new
 
 
-def _min_id_per_component(uniques: np.ndarray, label: np.ndarray) -> np.ndarray:
-    """Per-node representative = MIN ORIGINAL id in the node's component.
+def _min_id_per_component(ids, label: np.ndarray) -> np.ndarray:
+    """Per-node index of the MIN ORIGINAL id in the node's component.
 
-    ``uniques``: node ids (any orderable dtype), ``label``: per-node
-    component labels (min-code ints from :func:`_cc_label_kernel`).
-    Entirely sort + ``reduceat`` based: a pandas string
-    ``groupby(label).min()`` here measured 12s single-task at 2.4M nodes
-    (the dominant serial cost of the whole local-CC path); the rank
-    vector + per-component ``minimum.reduceat`` below does the same in
-    <1s. Object (string) ids are compared via numpy's fixed-width
-    unicode dtype when it round-trips (code-point order == Python str
-    order); ids with embedded NULs fall back to object argsort.
+    ``ids``: distinct node ids as a pyarrow Array (string or integer),
+    ``label``: per-node component labels (min-code ints from
+    :func:`_cc_label_kernel`). Returns positions into ``ids``. Ranks come
+    from ``pyarrow.compute.sort_indices`` — binary string order is UTF-8
+    byte order, which is Spark's ``UTF8String`` order (and Python's
+    code-point order), embedded NULs included — then one sort +
+    ``minimum.reduceat`` takes the min-rank member per label, with no
+    per-group Python.
     """
-    u = np.asarray(uniques)
-    if len(u) == 0:
-        return u
-    sort_key = u
-    if u.dtype == object:
-        uu = u.astype("U")
-        # numpy U-storage truncates at embedded NULs; verify round-trip
-        # lengths before trusting its ordering
-        lens = np.fromiter((len(s) for s in u), dtype=np.int64, count=len(u))
-        if np.array_equal(np.char.str_len(uu), lens):
-            sort_key = uu
-    order = np.argsort(sort_key, kind="stable")
-    rank = np.empty(len(u), dtype=np.int64)
-    rank[order] = np.arange(len(u), dtype=np.int64)
+    import pyarrow.compute as pc
+
+    order = pc.sort_indices(ids).to_numpy()
+    rank = np.empty(len(order), dtype=np.int64)
+    rank[order] = np.arange(len(order), dtype=np.int64)
     by_label = np.argsort(label, kind="stable")
     lab_sorted = label[by_label]
-    starts = np.flatnonzero(np.r_[True, lab_sorted[1:] != lab_sorted[:-1]])
-    min_rank = np.minimum.reduceat(rank[by_label], starts)
-    lut = np.empty(len(u), dtype=np.int64)
-    lut[lab_sorted[starts]] = min_rank
-    return u[order[lut[label]]]
+    # labels are >= 0, so prepend=-1 opens the first run (and an empty
+    # input yields no runs)
+    starts = np.flatnonzero(np.diff(lab_sorted, prepend=-1))
+    lut = np.empty(len(order), dtype=np.int64)
+    lut[lab_sorted[starts]] = np.minimum.reduceat(rank[by_label], starts)
+    return order[lut[label]]
 
 
 def _local_cc(ec: DataFrame) -> DataFrame:
-    """CC on one executor task: repartition(1) + a numpy kernel batch.
+    """CC on one executor task: repartition(1) + one ``mapInArrow`` batch.
 
-    ``ec``: DataFrame[u, v], null-free. Ids of any orderable type; the
-    component label is the MIN ORIGINAL id (ids are factorized hash-wise,
-    then the representative is restored rank-wise, see
-    :func:`_min_id_per_component` — no per-group Python). Self-loop
-    endpoints count as nodes (own component), like the distributed
-    path's node set.
+    ``ec``: DataFrame[u, v], null-free, over the ORIGINAL ids (string or
+    integer). The task dictionary-encodes the endpoints into int codes,
+    runs :func:`_cc_label_kernel`, and emits ``(node, component)`` with
+    the component already equal to the min original id
+    (:func:`_min_id_per_component`) — no object decode, no restore join.
+    Self-loop endpoints count as nodes (own component), like the
+    distributed path's node set.
     """
     id_type = ec.schema["u"].dataType
     out_schema = StructType(
@@ -140,32 +132,31 @@ def _local_cc(ec: DataFrame) -> DataFrame:
     )
 
     def solve(batches):
-        import pandas as pd
+        import pyarrow as pa
+        import pyarrow.compute as pc
 
-        a_parts: list = []
-        b_parts: list = []
-        for pdf in batches:
-            a_parts.append(pdf["u"].to_numpy())
-            b_parts.append(pdf["v"].to_numpy())
-        if not a_parts:
+        us, vs = [], []
+        for batch in batches:
+            us.append(batch.column(0))
+            vs.append(batch.column(1))
+        n = sum(len(c) for c in us)
+        if n == 0:
             return
-        av = np.concatenate(a_parts)
-        bv = np.concatenate(b_parts)
-        codes, uniques = pd.factorize(np.concatenate([av, bv]))
-        m = len(uniques)
-        a = codes[: len(av)].astype(np.int64)
-        b = codes[len(av):].astype(np.int64)
+        # chunked dictionary_encode shares ONE dictionary across chunks
+        enc = pc.dictionary_encode(pa.chunked_array(us + vs))
+        codes = np.concatenate(
+            [c.indices.to_numpy(zero_copy_only=False) for c in enc.chunks]
+        ).astype(np.int64)
+        ids = enc.chunk(0).dictionary
+        a, b = codes[:n], codes[n:]
         keep = a != b
-        label = _cc_label_kernel(a[keep], b[keep], m)
-        nodes = np.asarray(uniques)
-        yield pd.DataFrame(
-            {
-                "node": nodes,
-                "component": _min_id_per_component(nodes, label),
-            }
+        label = _cc_label_kernel(a[keep], b[keep], len(ids))
+        rep = _min_id_per_component(ids, label)
+        yield pa.RecordBatch.from_arrays(
+            [ids, ids.take(pa.array(rep))], names=["node", "component"]
         )
 
-    return ec.repartition(1).mapInPandas(solve, out_schema)
+    return ec.repartition(1).mapInArrow(solve, out_schema)
 
 
 def _small_star(edges: DataFrame) -> DataFrame:
@@ -202,31 +193,34 @@ def connected_components(
     natural ordering of the id column's type). Edges with a NULL endpoint
     are ignored entirely (a NULL id is not a node).
 
-    Two physical strategies, size-gated like AQE's join choices:
+    Two paths, size-gated like AQE's join choices. The gate comes first
+    for every id type: the edges are canonicalized to the unordered-
+    distinct set ``(least, greatest)`` over the ORIGINAL ids under one
+    lazy ``localCheckpoint``, and one count of that set decides.
 
-    - ``count(edges) <= local_max_edges``: ONE executor task solves the
-      whole graph with a vectorized numpy kernel (min-label propagation +
-      pointer jumping, O(E log d) vectorized ops) via ``mapInPandas`` —
-      below this size the star rounds' per-round shuffle/stage overhead
-      dominates wall-clock (measured ~0.9 s/round at 10^4 edges on
-      local[32], all fixed cost), while one Arrow batch solves it in
-      milliseconds. Still an executor task, NOT a driver collect. String
-      ids are hash-encoded BEFORE the single task (see ``encode_ids``) so
-      it consumes 16-byte long pairs; the min-original-id labels are
-      restored by parallel joins afterwards. The gate costs one count job
-      over the edge projection — cheap when the upstream (scored pairs)
-      is persisted, as in pipeline/match stages; pass
-      ``local_max_edges=0`` to skip both the count and the local path
-      (e.g. when edges is an expensive unmaterialized DAG).
-    - otherwise: alternating large-star/small-star rounds until the
-      canonical edge set's (count, xxhash64-xor) signature is stable,
-      then emit each node's component. Each round is localCheckpoint-ed:
-      lineage stays O(1) instead of O(rounds). This is the 10^12-turn
-      path — a corpus-scale match graph exceeds any single-task gate.
+    - ``count <= local_max_edges``: ONE executor task solves the whole
+      graph via ``mapInArrow`` (:func:`_local_cc`: Arrow dictionary
+      encode, the vectorized min-label kernel, min-original-id labels by
+      Arrow rank) — below this size the star rounds' per-round
+      shuffle/stage overhead dominates wall-clock (measured ~0.9 s/round
+      at 10^4 edges on local[32], all fixed cost), while one Arrow batch
+      solves it in milliseconds. Still an executor task, NOT a driver
+      collect. No hash encoding and no restore join: the labels come out
+      of the task final.
+    - otherwise: alternating large-star/small-star rounds, starting from
+      the already-checkpointed canonical set, until the edge set's
+      (count, xxhash64-xor) signature is stable. Each round is
+      localCheckpoint-ed: lineage stays O(1) instead of O(rounds). This
+      is the 10^12-turn path — a corpus-scale match graph exceeds any
+      single-task gate.
 
-    ``encode_ids`` (default: auto — on for string ids): hash-encode node
-    ids to longs before iterating and decode after (distributed path
-    only; the local kernel factorizes ids itself). Iterating on 8-byte
+    Pass ``local_max_edges=0`` to skip the canonical set, its count and
+    the single-task path (e.g. when edges is an expensive unmaterialized
+    DAG): the star rounds then read the edges directly.
+
+    ``encode_ids`` (default: auto — on for string ids; star-round path
+    only): hash-encode node ids to longs (``xxhash64``) before the rounds
+    and restore the min-original-id labels after. Iterating on 8-byte
     keys instead of strings cuts shuffle bytes ~10x and, measured on this
     pipeline, removes a 4x CPU-inflation at 32 threads caused by
     string-pair allocation churn.
@@ -237,183 +231,116 @@ def connected_components(
     escalated automatically to exact order-preserving dense ids
     (operators/ids.dense_ids — min over dense ids == min over original
     ids, so labels are identical and no post-hoc min-restore groupBy is
-    needed). The probe is one scan of the edge projection — noise next to
-    the star rounds at that scale, and it never runs on graphs small
-    enough for the local kernel (they return before this branch). Pass
-    ``None`` to pin the hash scheme (e.g. when the input DAG is expensive
-    and unmaterialized and the node count is known small).
+    needed). Pass ``None`` to pin the hash scheme (e.g. when the input
+    DAG is expensive and unmaterialized and the node count is known
+    small).
     """
     if encode_ids is None:
         encode_ids = dict(edges.dtypes)[src] == "string"
-    if not encode_ids and local_max_edges:
-        # Canonicalize to unordered-distinct first: match edges arrive
-        # DIRECTED (a->b and b->a both present for most matched pairs),
-        # so one cheap skinny-row distinct halves the graph — often the
-        # difference between the star rounds and the single-task kernel.
-        # Self-loops survive (least==greatest) so their nodes still label.
-        # Lazy localCheckpoint BEFORE the gate count: the count is the
-        # single action that materializes it, and whichever path wins —
-        # the local kernel or the star rounds below — consumes the
-        # materialized halved edge set instead of re-running the distinct
-        # (the pre-round-4 code paid the distinct once for the gate and
-        # then fed the star rounds the RAW directed list; flagged in
-        # round-4 review).
-        ec = (
-            edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-            .where(F.col(src).isNotNull() & F.col(dst).isNotNull())
-            .select(
-                F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v")
-            )
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
-        if ec.count() <= local_max_edges:
-            return _local_cc(ec)
-        # Over the gate: the star rounds consume the canonical edge set
-        # (their first iteration starts on half the rows). Recurse with
-        # the gate disabled — the distinct/count are already paid.
-        return connected_components(
-            ec.select(F.col("u").alias(src), F.col("v").alias(dst)),
-            src, dst, max_iterations, encode_ids=False, local_max_edges=0,
-        )
-    if encode_ids:
-        # Inline hash encoding: node -> xxhash64(node) needs NO dictionary
-        # join and NO driver action (an order-preserving dense-id scheme
-        # via operators.ids was measured at ~7 serial AQE mini-jobs of
-        # pure fixed overhead). Hash ids don't preserve order, so the
-        # canonical ``component = min original id`` label is restored
-        # afterwards with one groupBy over the component members.
-        # Collision risk (two conv ids colliding at 64 bits merges two
-        # clusters): ~n^2/2^65 — negligible below ~10^8 nodes; above the
-        # dense_id_threshold probe the exact dense-id path takes over.
-        # This is the one correctness-critical hash-equality reliance in
-        # the repo (README, "64-bit hash-equality risk register").
-        # null endpoints dropped BEFORE hashing: xxhash64(NULL) is a real
-        # long (null input hashes to the seed), which would fabricate a node
-        nonnull = edges.where(
-            F.col(src).isNotNull() & F.col(dst).isNotNull()
-        )
-        # Canonical unordered-distinct over the HASHED ids (cheap long
-        # comparisons): directed match edges carry each unordered pair
-        # twice, so this halves every downstream consumer — the local
-        # kernel's Arrow transfer, or the star rounds' first iteration.
-        canon = (
-            nonnull.select(
-                F.xxhash64(F.col(src)).alias("_s"),
-                F.xxhash64(F.col(dst)).alias("_d"),
-            )
-            .select(
-                F.least("_s", "_d").alias("src"),
-                F.greatest("_s", "_d").alias("dst"),
-            )
-            .distinct()
-            # lazy checkpoint: the gate count / node probe materializes
-            # it once; the local kernel or star rounds then read the
-            # halved edges instead of re-running the distinct
-            .localCheckpoint(eager=False)
-        )
-        # Local gate runs BEFORE the probe/star machinery, but on the
-        # HASH-ENCODED canonical edges: the single task then reads
-        # 16-byte long pairs instead of id strings (measured: the
-        # string-fed task was ~9s serial at 3M edges — mostly
-        # Arrow/pandas object decode — vs ~2s on longs), and the
-        # min-original-id restore below runs as ordinary parallel joins.
-        # Under the gate n <= 2 * local_max_edges nodes, so 64-bit
-        # collisions are negligible and the dense-id probe is skipped.
-        under_gate = False
-        if local_max_edges:
-            under_gate = canon.count() <= local_max_edges
-        if not under_gate and dense_id_threshold:
-            n_est = (
-                canon.select(
-                    F.explode(F.array(F.col("src"), F.col("dst"))).alias("_n")
-                )
-                .agg(F.approx_count_distinct("_n").alias("n"))
-                .first()["n"]
-            )
-            if n_est >= dense_id_threshold:
-                from record_matcher_spark.operators.ids import dense_ids
-
-                nodes_all = (
-                    nonnull.select(F.col(src).alias("_orig"))
-                    .union(nonnull.select(F.col(dst).alias("_orig")))
-                    .distinct()
-                )
-                mapping = dense_ids(nodes_all, "_orig", out="_id")
-                enc = (
-                    nonnull.join(
-                        mapping.select(
-                            F.col("_orig").alias("__s"),
-                            F.col("_id").alias("_sid"),
-                        ),
-                        F.col(src) == F.col("__s"),
-                    )
-                    .join(
-                        mapping.select(
-                            F.col("_orig").alias("__d"),
-                            F.col("_id").alias("_did"),
-                        ),
-                        F.col(dst) == F.col("__d"),
-                    )
-                    .select(
-                        F.col("_sid").alias("src"), F.col("_did").alias("dst")
-                    )
-                )
-                labeled = connected_components(
-                    enc, "src", "dst", max_iterations, encode_ids=False,
-                    local_max_edges=0,
-                )
-                # dense ids are order-preserving: the min dense id IS the
-                # min original id — decode with two dictionary joins, no
-                # min-restore aggregation
-                dec_n = mapping.select(
-                    F.col("_id").alias("node"), F.col("_orig").alias("_no")
-                )
-                dec_c = mapping.select(
-                    F.col("_id").alias("component"),
-                    F.col("_orig").alias("_co"),
-                )
-                return (
-                    labeled.join(dec_n, "node")
-                    .join(dec_c, "component")
-                    .select(
-                        F.col("_no").alias("node"),
-                        F.col("_co").alias("component"),
-                    )
-                )
-        if under_gate:
-            labeled = _local_cc(
-                canon.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-            )
-        else:
-            labeled = connected_components(
-                canon, "src", "dst", max_iterations, encode_ids=False,
-                local_max_edges=0,
-            )
-        mapping = (
-            nonnull.select(F.col(src).alias("_orig"))
-            .union(nonnull.select(F.col(dst).alias("_orig")))
-            .distinct()
-            .select("_orig", F.xxhash64(F.col("_orig")).alias("node"))
-        )
-        with_str = labeled.join(mapping, "node")
-        comp_min = with_str.groupBy("component").agg(
-            F.min("_orig").alias("_cluster")
-        )
-        return with_str.join(comp_min, "component").select(
-            F.col("_orig").alias("node"),
-            F.col("_cluster").alias("component"),
-        )
-
-    nn = edges.where(F.col(src).isNotNull() & F.col(dst).isNotNull())
-    e = nn.select(F.col(src).alias("u"), F.col(dst).alias("v")).where(
-        F.col(src) != F.col(dst)
+    # null endpoints dropped first: xxhash64(NULL) is a real long (null
+    # input hashes to the seed), which would fabricate a node
+    e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).where(
+        F.col("u").isNotNull() & F.col("v").isNotNull()
     )
-    nodes = (
-        nn.select(F.col(src).alias("node"))
-        .union(nn.select(F.col(dst).alias("node")))
+    if local_max_edges:
+        # Match edges arrive DIRECTED (a->b and b->a both present for
+        # most matched pairs), so one cheap skinny-row distinct halves the
+        # graph. Self-loops survive (least==greatest) so their nodes still
+        # label. The gate count materializes the checkpoint, and whichever
+        # path wins reads it.
+        e = _canonical(e)
+        if e.count() <= local_max_edges:
+            return _local_cc(e)
+    if not encode_ids:
+        return _star_cc(e, max_iterations)
+    # Inline hash encoding: node -> xxhash64(node) needs NO dictionary
+    # join and NO driver action (an order-preserving dense-id scheme via
+    # operators.ids was measured at ~7 serial AQE mini-jobs of pure fixed
+    # overhead). Collision risk (two ids colliding at 64 bits merges two
+    # clusters): ~n^2/2^65 — negligible below ~10^8 nodes; above the
+    # dense_id_threshold probe the exact dense-id path takes over. This
+    # is the one correctness-critical hash-equality reliance in the repo
+    # (README, "64-bit hash-equality risk register").
+    hashed = e.select(F.xxhash64("u").alias("u"), F.xxhash64("v").alias("v"))
+    if not local_max_edges:
+        # no canonical set yet: halve the directed list on cheap long
+        # compares, read by the probe and the first round
+        hashed = _canonical(hashed)
+    nodes_all = (
+        e.select(F.col("u").alias("_orig"))
+        .union(e.select(F.col("v").alias("_orig")))
         .distinct()
     )
+    if dense_id_threshold:
+        n_est = (
+            hashed.select(F.explode(F.array("u", "v")).alias("_n"))
+            .agg(F.approx_count_distinct("_n").alias("n"))
+            .first()["n"]
+        )
+        if n_est >= dense_id_threshold:
+            from record_matcher_spark.operators.ids import dense_ids
+
+            mapping = dense_ids(nodes_all, "_orig", out="_id")
+
+            def _ids(c: str) -> DataFrame:
+                return mapping.select(
+                    F.col("_orig").alias(f"_orig_{c}"), F.col("_id").alias(c)
+                )
+
+            enc = (
+                e.join(_ids("s"), F.col("u") == F.col("_orig_s"))
+                .join(_ids("d"), F.col("v") == F.col("_orig_d"))
+                .select(F.col("s").alias("u"), F.col("d").alias("v"))
+            )
+            # dense ids are order-preserving: the min dense id IS the min
+            # original id — decode with two dictionary joins, no
+            # min-restore aggregation
+            return (
+                _star_cc(enc, max_iterations)
+                .join(_ids("node"), "node")
+                .join(_ids("component"), "component")
+                .select(
+                    F.col("_orig_node").alias("node"),
+                    F.col("_orig_component").alias("component"),
+                )
+            )
+    # Hash ids don't preserve order: restore the canonical
+    # ``component = min original id`` label with one groupBy over the
+    # component members.
+    with_str = _star_cc(hashed, max_iterations).join(
+        nodes_all.select("_orig", F.xxhash64("_orig").alias("node")), "node"
+    )
+    comp_min = with_str.groupBy("component").agg(
+        F.min("_orig").alias("_cluster")
+    )
+    return with_str.join(comp_min, "component").select(
+        F.col("_orig").alias("node"), F.col("_cluster").alias("component")
+    )
+
+
+def _canonical(edges: DataFrame) -> DataFrame:
+    """Unordered-distinct ``(least, greatest)`` edge set under a LAZY
+    localCheckpoint: its first action materializes it once, and every
+    later consumer reads the halved set instead of re-running the
+    distinct."""
+    return (
+        edges.select(
+            F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v")
+        )
+        .distinct()
+        .localCheckpoint(eager=False)
+    )
+
+
+def _star_cc(edges: DataFrame, max_iterations: int) -> DataFrame:
+    """Star rounds over null-free DataFrame[u, v] → DataFrame[node,
+    component] (min id per component)."""
+    nodes = (
+        edges.select(F.col("u").alias("node"))
+        .union(edges.select(F.col("v").alias("node")))
+        .distinct()
+    )
+    e = edges.where(F.col("u") != F.col("v"))
 
     def signature(df: DataFrame) -> tuple[int, int]:
         row = df.agg(

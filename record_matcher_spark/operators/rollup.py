@@ -53,8 +53,8 @@ def rollup_conversations(
       operators/blocking). Blocking needs case-folded normalization for
       recall — measured on a 30%-case-noised corpus, case-sensitive
       minhash-only candidate recall collapses to ~0.16 vs ~0.62
-      case-folded (tests/test_blocking.py pins the full-keyset recall) —
-      while scoring keeps the scorer's case-sensitive semantics.
+      case-folded (tests/test_blocking_recall.py pins the full-keyset
+      recall) — while scoring keeps the scorer's case-sensitive semantics.
 
     Both are plain projections over ``full_text`` — no extra aggregation,
     no join, the rollup's plan shape is unchanged. Each NORMALIZATION of

@@ -408,10 +408,11 @@ def score_pairs(
     partition count from OPTIMIZER STATISTICS
     (:func:`_estimated_scan_partitions`) — plan-build stays job-free: no
     RDD conversion, no action, no AQE stage materialization (pinned in
-    tests/test_plans.py). Unknown statistics skip the repartition (the
-    scale-safe direction). Pass ``0`` to skip the estimate entirely, or
-    an explicit int to change the floor (the estimate still runs;
-    repartition only happens when below the floor).
+    tests/test_plans.py). Unknown statistics skip the repartition for
+    this default (the scale-safe direction). Pass ``0`` to skip the
+    estimate entirely, or an explicit int to set the floor: the x side is
+    then repartitioned whenever the estimate is below the floor OR
+    unknown — an explicit floor is never silently dropped.
 
     Laziness note: the per-column uniqueness aggregate (O2) runs EAGERLY
     here — one Spark job over x producing an O(columns) result that is
@@ -422,7 +423,8 @@ def score_pairs(
     cfg.validate(x_df.columns, y_df.columns, require_blocking=require_blocking)
 
     x = prepare_x(x_df, cfg)
-    if min_parallelism is None:
+    explicit_floor = min_parallelism is not None
+    if not explicit_floor:
         min_parallelism = x_df.sparkSession.sparkContext.defaultParallelism
     x_cols = _x_side_columns(cfg)
     group_x = sorted(set(cfg.columns_to_group.values()))
@@ -437,9 +439,11 @@ def score_pairs(
     # The estimate is pure plan statistics over the RAW input — no job, no
     # RDD conversion — and never touches the scorer prep / pandas UDF
     # columns.
+    # Unknown statistics skip the repartition for the default floor only:
+    # an explicit floor is honoured either way.
     if min_parallelism:
         est = _estimated_scan_partitions(x_df)
-        if est is not None and est < min_parallelism:
+        if explicit_floor if est is None else est < min_parallelism:
             xp = xp.repartition(min_parallelism)
 
     yp = _y_side(y_df, cfg, extra=cfg.columns_to_group)

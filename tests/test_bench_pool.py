@@ -139,3 +139,29 @@ def test_headline_pool_never_mixes_code_hashes_or_sfs():
     _, pooled, _ = bench._pool_headlines(hist, "h1", "0.01", {"q1": [[5.0, 0.1]]})
     assert pooled["q1"] == 5.0           # own sf bucket
     assert hist["h1"]["sf"]["0.1"]["q1"] == [[10.0, 0.1]]
+
+
+def test_bench_output_line_parses_with_pooled_and_quality_blocks():
+    """The result line main() prints: stubbed trials from two invocations
+    of one code hash go through the same assembly main() uses, and the
+    JSON parses with the pooled invocation count and the transcripts
+    quality block."""
+    import json
+
+    hist: dict = {}
+    quality = {"f1": 0.999361, "precision": 1.0, "recall": 0.998723}
+    for trials in (
+        {"match_jw": [[4.0, 0.1]], "transcripts_match": [[8.0, 0.2]]},
+        {"match_jw": [[3.5, 2.0]], "transcripts_match": [[7.0, 0.1]]},
+    ):
+        out = bench._assemble_output(
+            hist, "h1", "0.1", trials, n_convs=700, n_clusters=300,
+            quality=quality,
+        )
+    line = json.loads(json.dumps(out))
+    assert line["pooled"]["invocations"] == 2
+    assert line["pooled"]["n_trials"] == {"match_jw": 2, "transcripts_match": 2}
+    assert line["queries"] == {"match_jw": 4.0, "transcripts_match": 7.0}
+    assert line["value"] == 11.0
+    assert line["transcripts"]["f1"] == 0.99936
+    assert line["transcripts"]["conversations_per_sec"] == 100.0

@@ -7,6 +7,7 @@ from __future__ import annotations
 import datetime
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from record_matcher_spark.config import ColumnRule, MatchConfig
@@ -89,6 +90,40 @@ def test_increment_equals_batch_on_wide_margin_corpus(spark):
     inc_rows = {r["conv_id"]: r["cluster_id"] for r in inc_all.collect()}
     assert inc_rows == full_rows
 
+    full.unpersist(); base.unpersist(); inc.unpersist()
+
+
+def test_increment_base_schema_guard(spark):
+    """Only the tokenize-once columns may be missing from the base: a base
+    without ``ts_min`` is malformed and raises, while a base lacking just
+    ``tok_hashes*`` (an older, token-less rollup) still reproduces the
+    full-batch clustering exactly."""
+    t = _closed_corpus(spark, n=20)
+    v = F.regexp_extract("conv_id", r"_v(\d+)$", 1).cast("long")
+    base_t, new_t = t.where(v == 0), t.where(v > 0)
+    full = match_transcripts(t, edge_mode="threshold")
+    base = match_transcripts(base_t, edge_mode="threshold")
+    assert {"ts_min", "tok_hashes", "tok_hashes_lower"} <= set(
+        base.conversations.columns
+    )
+
+    with pytest.raises(ValueError, match="ts_min"):
+        match_increment(
+            new_t, base.conversations.drop("ts_min"), base.clusters
+        )
+
+    inc = match_increment(
+        new_t,
+        base.conversations.drop("tok_hashes", "tok_hashes_lower"),
+        base.clusters,
+    )
+    inc_all = apply_merges(base.clusters, inc.merges).unionByName(
+        inc.assignments
+    )
+    full_rows = {r["conv_id"]: r["cluster_id"] for r in full.clusters.collect()}
+    assert {r["conv_id"]: r["cluster_id"] for r in inc_all.collect()} == (
+        full_rows
+    )
     full.unpersist(); base.unpersist(); inc.unpersist()
 
 

@@ -186,3 +186,54 @@ def test_score_pairs_build_no_rdd_conversion(spark, monkeypatch):
     plan = out._jdf.queryExecution().optimizedPlan().toString()
     assert "Repartition" in plan, plan
     assert out.limit(5).count() > 0
+
+
+def test_small_string_cc_is_one_arrow_task_no_join_no_hash(spark):
+    """An under-gate string-id graph is labeled in ONE mapInArrow task over
+    the original ids: the plan holds no join (no min-id restore) and no
+    xxhash64 id encoding."""
+    from record_matcher_spark.operators.cluster import connected_components
+
+    edf = spark.createDataFrame(
+        [("b", "a"), ("a", "b"), ("c", "b"), ("x", "y"), ("z", "z")],
+        "src string, dst string",
+    )
+    out = connected_components(edf, "src", "dst")
+    plan = _plan(out)
+    assert "MapInArrow" in plan, plan
+    assert "Join" not in plan and "xxhash64" not in plan, plan
+    assert {(r["node"], r["component"]) for r in out.collect()} == {
+        ("a", "a"), ("b", "a"), ("c", "a"), ("x", "x"), ("y", "x"),
+        ("z", "z"),
+    }
+
+
+def test_explicit_min_parallelism_honoured_with_unknown_stats(spark):
+    """A createDataFrame x has no optimizer size statistics. The default
+    floor then skips the fan-out (scale-safe), but an explicit
+    ``min_parallelism`` must still repartition the x side to it."""
+    from record_matcher_spark.config import ColumnRule, MatchConfig
+    from record_matcher_spark.operators.scoring import (
+        _estimated_scan_partitions,
+        score_pairs,
+    )
+
+    rows = [(i, f"name{i % 7}", i % 3) for i in range(40)]
+    x = spark.createDataFrame(rows, "row_id long, name string, nk long")
+    assert _estimated_scan_partitions(x) is None
+    cfg = MatchConfig(
+        rules=(ColumnRule("name", ("name",), scorer="exact_match"),),
+        columns_to_group={"nk": "nk"},
+        x_id="row_id", y_id="row_id",
+    )
+
+    def plan(df) -> str:
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    default = score_pairs(x, x, cfg)
+    assert "Repartition" not in plan(default), plan(default)
+    explicit = score_pairs(x, x, cfg, min_parallelism=5)
+    assert "Repartition 5" in plan(explicit), plan(explicit)
+    assert sorted(map(tuple, explicit.collect())) == sorted(
+        map(tuple, default.collect())
+    )

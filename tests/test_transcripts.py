@@ -116,27 +116,29 @@ def test_connected_components_local_equals_distributed(spark):
 
 
 def test_min_id_per_component_kernel():
-    """Sort/reduceat representative restore == per-group Python min,
-    for string ids (U-dtype fast path), ids with embedded NULs (object
-    fallback — numpy U storage truncates at NUL, so 'a\\x00z' must still
-    order as Python compares it), and integer ids."""
+    """Arrow-rank representative == per-group Python min, for string ids,
+    ids with embedded NULs ('a\\x00z' must order as Python compares it),
+    non-ASCII / non-BMP ids (UTF-8 byte order == code-point order) and
+    integer ids."""
     import numpy as np
+    import pyarrow as pa
 
     from record_matcher_spark.operators.cluster import _min_id_per_component
 
     cases = [
-        np.array(["b", "a", "c", "z", "m"], dtype=object),
-        np.array(["a\x00z", "a", "a\x00a", "b"], dtype=object),
-        np.array([7, 3, 9, 1, 5], dtype=np.int64),
+        ["b", "a", "c", "z", "m"],
+        ["a\x00z", "a", "a\x00a", "b"],
+        ["\U0001f600", "\uffff", "e\u0301", "\u00e9", "", " "],
+        [7, 3, 9, 1, 5],
     ]
     rng = random.Random(5)
     for u in cases:
         label = np.array([rng.randrange(2) for _ in u], dtype=np.int64)
-        got = _min_id_per_component(u, label)
+        got = [u[i] for i in _min_id_per_component(pa.array(u), label)]
         exp = [min(u[j] for j in range(len(u)) if label[j] == label[i])
                for i in range(len(u))]
-        assert list(got) == exp, u
-    assert len(_min_id_per_component(np.array([], dtype=object),
+        assert got == exp, u
+    assert len(_min_id_per_component(pa.array([], pa.string()),
                                      np.array([], dtype=np.int64))) == 0
 
 
